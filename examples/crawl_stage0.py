@@ -88,7 +88,7 @@ def _write_segments(d: str) -> None:
 
 
 def main() -> None:
-    spark = get_spark(app_name="crawl_stage0", master="local[4]", shuffle_partitions=4)
+    spark = get_spark(app_name="crawl_stage0", master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="crawl_stage0_")
     seg_dir = os.path.join(tmp, "segments")

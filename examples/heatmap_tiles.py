@@ -43,7 +43,7 @@ CELL, LEVELS = 0.01, 3
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app_name="heatmap_tiles", shuffle_partitions=8)
+    spark = get_spark(app_name="heatmap_tiles")
     spark.sparkContext.setLogLevel("ERROR")
 
     ev = load_table(spark, sf_dir, "events")

@@ -58,9 +58,7 @@ from trackintel_spark.sources import load_table
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    # demo-sized inputs: few shuffle partitions (stage latency, not data,
-    # dominates at 500 docs; on a cluster drop this override)
-    spark = get_spark(app_name="llm_data_pipeline", shuffle_partitions=8)
+    spark = get_spark(app_name="llm_data_pipeline")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = load_table(spark, sf_dir, "documents")

@@ -80,7 +80,7 @@ def _shard(members):
 
 
 def main() -> None:
-    spark = get_spark(app_name="multimodal_shards", shuffle_partitions=4)
+    spark = get_spark(app_name="multimodal_shards")
     spark.sparkContext.setLogLevel("ERROR")
     rng = np.random.RandomState(0)
 

@@ -36,7 +36,7 @@ PARAMS = dict(dist_threshold=200, time_threshold=5, gap_threshold=120)
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark(app_name="streaming_mobility", shuffle_partitions=8)
+    spark = get_spark(app_name="streaming_mobility")
     spark.sparkContext.setLogLevel("ERROR")
 
     ev = load_table(spark, sf_dir, "events")

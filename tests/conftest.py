@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -15,6 +16,20 @@ def spark():
     s = get_spark(app_name="trackintel_spark_tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@contextmanager
+def shuffle_partitions(spark, n: int):
+    """Set ``spark.sql.shuffle.partitions`` on the shared session and
+    restore it afterwards. A stateful streaming query started inside
+    takes ``n`` state partitions."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def make_pfs(spark, rows):

@@ -309,8 +309,11 @@ def test_asof_keyless_skewed_but_nonconstant_keeps_single_bucket(spark):
 def test_asof_shuffle_partitions_conf_non_numeric(spark):
     """A non-numeric spark.sql.shuffle.partitions (some deployments set
     'auto' via external resource managers) must not crash the key-less
-    path — the bucket count falls back to 200. Spark 4 refuses to SET a
-    non-int value on a live session, so probe the helper with a stub."""
+    path — the bucket count falls back to the session's default
+    parallelism. Spark 4 refuses to SET a non-int value on a live
+    session, so probe the helper with a stub."""
+    from types import SimpleNamespace
+
     from trackintel_spark.operators.asof import _shuffle_partitions
 
     class _Conf:
@@ -323,9 +326,10 @@ def test_asof_shuffle_partitions_conf_non_numeric(spark):
     class _S:
         def __init__(self, v):
             self.conf = _Conf(v)
+            self.sparkContext = SimpleNamespace(defaultParallelism=6)
 
-    assert _shuffle_partitions(_S("auto")) == 200
-    assert _shuffle_partitions(_S(None)) == 200
+    assert _shuffle_partitions(_S("auto")) == 6
+    assert _shuffle_partitions(_S(None)) == 6
     assert _shuffle_partitions(_S("64")) == 64
     assert _shuffle_partitions(spark) == int(
         spark.conf.get("spark.sql.shuffle.partitions")

@@ -213,6 +213,26 @@ def test_tracking_quality_day(spark):
     assert abs(row.quality - 1800 / 86400) < 1e-12
 
 
+def test_tracking_quality_hour(spark):
+    """Per hour of day: tracked seconds / (3600 * tracked days spanned),
+    with records split at hour (and day) borders."""
+    sp = _mk_sp(spark, [
+        (0, 1, 150, 195, 8.5, 47.4),    # Jan 1 10:30-11:15, crosses 11:00
+        (1, 1, 1560, 1605, 8.5, 47.4),  # Jan 2 10:00-10:45
+        (2, 2, 940, 980, 8.5, 47.4),    # Jan 1 23:40 - Jan 2 00:20, crosses midnight
+    ])
+    got = {(r.user_id, r.hour): r.quality for r in temporal_tracking_quality(sp, "hour").collect()}
+    expect = {
+        (1, 10): (1800 + 2700) / (3600 * 2),  # hour 10 on days 0 and 1
+        (1, 11): 900 / 3600,
+        (2, 23): 1200 / 3600,
+        (2, 0): 1200 / 3600,
+    }
+    assert got.keys() == expect.keys()
+    for k, q in expect.items():
+        assert abs(got[k] - q) < 1e-12, (k, got[k], q)
+
+
 def test_tracking_quality_bad_granularity(spark):
     sp = _mk_sp(spark, [(0, 1, 0, 30, 8.5, 47.4)])
     with pytest.raises(ValueError, match="granularity unknown"):

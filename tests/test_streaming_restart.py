@@ -12,7 +12,10 @@ exact mobility kernels survive that cycle:
   duplicated or lost across the restart (file source replays nothing);
 * the reorder buffer's pickled pandas frame (an opaque BinaryType
   state column, streaming/reorder.py:37) round-trips through the
-  HDFS-backed state store checkpoint, not just process memory.
+  HDFS-backed state store checkpoint, not just process memory;
+* a query keeps the state-partition count it started with: a restart
+  in a session that now sizes shuffles differently re-applies the
+  count recorded in the checkpoint's offset log.
 
 The reference is batch-only (reference trackintel
 preprocessing/positionfixes.py:243 sorts full history up front), so
@@ -22,14 +25,19 @@ across-restarts == one batch run over the full history.
 
 from __future__ import annotations
 
+import json
 import os
 import time
+from functools import partial
 
 from pyspark.sql import functions as F
 
 from test_streaming_reorder import SP_D, SP_DISORDER_MIN, SP_PARAMS, _jittered_chunks, _mk_pfs_rows
+from test_streaming_trips import PARAMS as TRIP_PARAMS
+from test_streaming_trips import _mk_rows as _mk_trip_rows
+from tests.conftest import shuffle_partitions
 from trackintel_spark.operators import generate_staypoints
-from trackintel_spark.streaming import staypoints_stream_exact
+from trackintel_spark.streaming import staypoints_stream_exact, trips_stream_exact
 
 BASE = 1700000000
 
@@ -64,9 +72,10 @@ def _add_files(spark, src, chunks, start_idx=0):
             os.utime(os.path.join(d, f), (now, now))
 
 
-def _run_once(spark, src, out, ckpt, **op_kwargs):
-    """One availableNow pass of the staypoint stream into a parquet
-    sink, restarting from ``ckpt`` if it exists. Returns the sink rows."""
+def _run_once(spark, src, out, ckpt, op=partial(staypoints_stream_exact, **SP_PARAMS), **op_kwargs):
+    """One availableNow pass of the ``op`` stream (default: staypoints)
+    into a parquet sink, restarting from ``ckpt`` if it exists. Returns
+    the sink rows."""
     schema = "id long, user_id long, tracked_at timestamp, lon double, lat double"
     stream = (
         spark.readStream.schema(schema)
@@ -75,7 +84,7 @@ def _run_once(spark, src, out, ckpt, **op_kwargs):
         .parquet(src)
     )
     q = (
-        staypoints_stream_exact(stream, **SP_PARAMS, **op_kwargs)
+        op(stream, **op_kwargs)
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -156,3 +165,57 @@ def test_reorder_buffer_pickle_survives_restart(spark, tmp_path):
     # flush fixes (see _mk_pfs_rows) make the tail comparable
     assert _key_set(final) == _batch_expected(spark, rows)
     assert len(final) > 5
+
+
+def _recorded_state_partitions(ckpt):
+    """State-partition count in the latest offset-log entry: line 2 of
+    ``offsets/<batch>`` is the JSON batch metadata with the SQL confs
+    the query pinned at its first start."""
+    offsets = os.path.join(ckpt, "offsets")
+    last = max((f for f in os.listdir(offsets) if f.isdigit()), key=int)
+    with open(os.path.join(offsets, last)) as fh:
+        meta = json.loads(fh.read().splitlines()[1])
+    return int(meta["conf"]["spark.sql.shuffle.partitions"])
+
+
+def _state_store_partitions(ckpt):
+    """Partition directories per stateful operator (``state/<op>/<part>``)."""
+    state = os.path.join(ckpt, "state")
+    return {
+        op: sum(d.isdigit() for d in os.listdir(os.path.join(state, op)))
+        for op in os.listdir(state)
+    }
+
+
+def test_restart_keeps_checkpointed_state_partition_count(spark, tmp_path):
+    """Start trips_stream_exact at 8 state partitions, stop it
+    mid-stream, resume from the checkpoint in a session whose conf now
+    says 2: the query resumes at 8 and its output equals one
+    uninterrupted run."""
+    rows = _mk_trip_rows(n_users=3)
+    cut1, cut2 = len(rows) // 3 + 5, 2 * len(rows) // 3 + 11
+    chunks = [rows[:cut1], rows[cut1:cut2], rows[cut2:]]
+    trips = partial(trips_stream_exact, **TRIP_PARAMS)
+    tmp = str(tmp_path)
+
+    _add_files(spark, os.path.join(tmp, "src_full"), chunks)
+    expected = sorted(map(repr, _run_once(
+        spark, os.path.join(tmp, "src_full"), os.path.join(tmp, "out_full"),
+        os.path.join(tmp, "ckpt_full"), op=trips,
+    )))
+
+    src, out, ckpt = (os.path.join(tmp, d) for d in ("src", "out", "ckpt"))
+    _add_files(spark, src, chunks[:2])
+    with shuffle_partitions(spark, 8):
+        first = _run_once(spark, src, out, ckpt, op=trips)
+    assert 0 < len(first) < len(expected)
+    assert _recorded_state_partitions(ckpt) == 8
+
+    _add_files(spark, src, chunks[2:], start_idx=2)
+    with shuffle_partitions(spark, 2):
+        final = _run_once(spark, src, out, ckpt, op=trips)
+    assert _recorded_state_partitions(ckpt) == 8
+    per_op = _state_store_partitions(ckpt)
+    assert per_op and set(per_op.values()) == {8}, per_op
+    assert sorted(map(repr, final)) == expected
+    assert len(expected) > 10

@@ -291,7 +291,9 @@ def _run_streaming_probe(spark, flat, per_user, n_batches, schema, qname, op, ou
     # three probes (sp 9.5 / trips 11.7 / tours 12.3 s at 16 parts vs
     # 12.1-12.3 at 8 and 15.6+ at 32). Derived from per-trigger row
     # volume, clamped to the session default so a cluster-sized config
-    # still rules. Override: SPARK_GRAFT_STREAM_SHUFFLE.
+    # still rules. On 4 cores the clamp (4 state partitions) ran all
+    # three 1M probes ~25-30% faster than 16 partitions, with identical
+    # outputs. Override: SPARK_GRAFT_STREAM_SHUFFLE.
     sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     rows_per_trigger = max(1, n // n_batches)
     # session default is the hard ceiling (a smaller cluster/test config

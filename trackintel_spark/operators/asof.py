@@ -61,11 +61,12 @@ _SEC_SCALE = 2.0**32
 
 def _shuffle_partitions(spark) -> int:
     """``spark.sql.shuffle.partitions`` as an int, tolerating the 'auto'
-    / non-numeric values some deployments set (falls back to 200)."""
+    / non-numeric values some deployments set (falls back to the
+    session's default parallelism, the rule ``get_spark`` sizes by)."""
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        return int(spark.conf.get("spark.sql.shuffle.partitions", None))
     except (TypeError, ValueError):
-        return 200
+        return spark.sparkContext.defaultParallelism
 
 
 def _rank_cuts(u: DataFrame, rank0: Column, n_buckets: int) -> list[float]:

@@ -1,13 +1,21 @@
-"""SparkSession helpers with scale-oriented defaults.
-
-Defaults chosen for a 100 TB-class deployment, testable on local[*]:
+"""SparkSession helpers with the engine's defaults.
 
 * AQE on (runtime partition coalescing + skew-join splitting);
 * Arrow on (all Python kernels are Arrow-batched pandas UDFs);
 * UTC session timezone (the reference requires tz-aware timestamps
   everywhere, model/positionfixes.py:64-66 — we normalize to UTC);
-* shuffle partitions sized via env so tests (small) and clusters
-  (large) pick sensible values without code changes.
+* ``spark.sql.shuffle.partitions`` follows the cores the session runs
+  on (``sparkContext.defaultParallelism``): N for ``local[N]``, every
+  core for ``local[*]``. This is the rule the Python-kernel stages
+  already use (``plans.partitioning.kernel_partitions``), so one
+  session has one sizing rule. The value is read once, when the
+  session is built. A session handed back by ``getOrCreate`` that runs
+  on a cluster can report too few cores before its executors register,
+  so pass ``shuffle_partitions`` there. A stateful streaming query
+  fixes its state-partition count from this value when it first
+  starts; Spark records that count in the query's offset log and
+  re-applies it on every restart from the checkpoint, whatever the
+  session says by then.
 """
 
 from __future__ import annotations
@@ -25,20 +33,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
-    On a real cluster, pass ``master=None`` and let spark-submit decide.
-    Locally, ``SPARK_GRAFT_CPUS`` (default: all cores) sizes local[N].
+    ``master=None`` means ``local[SPARK_GRAFT_CPUS]`` (default: all
+    cores). Shuffle partitions default to the session's default
+    parallelism, read once after the session starts; an explicit
+    ``shuffle_partitions`` or an ``extra_conf`` entry for
+    ``spark.sql.shuffle.partitions`` wins. A streaming query restarted
+    from a checkpoint keeps the count recorded there.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -73,6 +82,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if shuffle_partitions is not None:
+        conf.setdefault("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in conf:
+        spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    return spark
